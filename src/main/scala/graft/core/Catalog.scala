@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Namespaced table catalog over a warehouse directory — the Spark-native
@@ -528,13 +528,15 @@ class Catalog(val spark: SparkSession, val warehouse: Path) {
 
   /** Register ONE table as temp views under both its short name and the
     * `ns__table` federated alias. Lazy view over the current snapshot —
-    * no materialization; the table's metadata head is resolved here. */
-  def registerView(ident: String): Unit = {
+    * no materialization; the table's metadata head is resolved here.
+    * Returns the registered frame. */
+  def registerView(ident: String): DataFrame = {
     val (ns, t) = parseIdent(ident)
     if (traceRegistrations) registrationTrace.add(s"$ns.$t")
     val df = loadTable(ident).read()
     df.createOrReplaceTempView(t)
     df.createOrReplaceTempView(s"${ns}__$t")
+    df
   }
 
   /** Register every table (reference query.py:52-75, joins.py:13-41) — the

@@ -1531,43 +1531,6 @@ class IceTable(val spark: SparkSession, val dir: Path) {
       case Some(s) => (pruneFiles(s, filter).size, s.files.size)
     }
 
-  /** Scan with the same manifest/partition/bloom file skipping as
-    * [[prunedRead]] but from PRE-EXTRACTED conjuncts and WITHOUT re-applying
-    * the predicate. Contract: the caller's own plan must still contain the
-    * exact filter the conjuncts came from — the SQL entry path satisfies it
-    * by swapping the pruned view in UNDER the untouched user query
-    * ([[graft.engine.QueryEngine.execute]]). Pruning is conservative (a
-    * kept file may match nothing), so with the caller's filter on top the
-    * result is always identical to an unpruned read. Returns
-    * (frame, keptFiles, totalFiles). */
-  def prunedScanStats(conjs: Seq[FilePruning.Conjunct]): (DataFrame, Int, Int) =
-    currentSnapshot.filter(_.files.nonEmpty) match {
-      case None => (emptyDf(schema), 0, 0)
-      case Some(s) =>
-        val files = pruneFiles(s, conjs)
-        val df =
-          if (files.isEmpty) emptyDf(schema)
-          else readSnapshot(Some(s.copy(files = files)))
-        (df, files.size, s.files.size)
-    }
-
-  /** Pruned-OUT file paths for pre-extracted conjuncts against the CURRENT
-    * snapshot: the paths the conjuncts PROVE cannot match, plus
-    * (kept, total) counts. The SQL entry path subtracts these from the
-    * already-analyzed plan's scan leaves ([[graft.engine.QueryEngine]]) —
-    * subtraction, not intersection, so a file the leaf references that
-    * this snapshot no longer tracks (concurrent compaction between
-    * analysis and pruning) is conservatively KEPT, never dropped. */
-  def prunedOutPaths(conjs: Seq[FilePruning.Conjunct]): (Set[String], Int, Int) =
-    currentSnapshot.filter(_.files.nonEmpty) match {
-      case None => (Set.empty, 0, 0)
-      case Some(s) =>
-        val keptFiles = pruneFiles(s, conjs)
-        val kept = keptFiles.map(_.path).toSet
-        (s.files.map(_.path).filterNot(kept).toSet,
-          keptFiles.size, s.files.size)
-    }
-
   /** PINNED-snapshot read with the same manifest/partition/bloom file
     * skipping as [[prunedRead]] but WITHOUT applying the filter — the
     * caller's plan re-applies it, so pruning stays purely advisory.

@@ -494,7 +494,7 @@ private class EngineReadScanBuilder(tbl: IceTable, snap: graft.core.Snapshot)
           // (queryExecution.toRdd below): Spark's V1-bridge scan exec then
           // skips both halves of the InternalRow→Row→InternalRow round
           // trip the plain `.rdd` bridge pays — measured 10-19% of the
-          // whole MoR read at sf0.1 (tools/MorReadProf), all of it
+          // whole MoR read at sf0.1 (NOTES_r16.md item 8), all of it
           // per-row conversion
           override val needConversion: Boolean = false
           override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {

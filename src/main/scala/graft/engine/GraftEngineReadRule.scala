@@ -15,7 +15,7 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
   * this rule they ride [[EngineReadScanBuilder]]'s `V1Scan` bridge —
   * correct, but row-based at the scan boundary (no columnar batches, no
   * codegen fusion across it; measured 9-14% on wide aggregates at sf0.1,
-  * tools/MorReadProf). Substituting the LOGICAL plan instead makes the
+  * NOTES_r16.md item 8). Substituting the LOGICAL plan instead makes the
   * delete anti-joins and field-id projections part of the query's own
   * plan: Catalyst pushes the query's filters through them into the
   * columnar parquet scans (row-group pushdown AND manifest/partition/

@@ -2,13 +2,10 @@ package graft.engine
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, LogicalPlan}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.graft.GraftFileIndex
 
 import graft.Lakehouse
-import graft.core.{Catalog, FilePruning}
+import graft.core.Catalog
 
 /** SQL entry point over catalog tables (reference query.py / joins.py).
   *
@@ -19,19 +16,39 @@ import graft.core.{Catalog, FilePruning}
   *    QUERY: only the tables a statement references are resolved
   *    (query.py:52-75 re-registers the whole catalog per query — O(catalog)
   *    driver metadata I/O at scale);
-  *  - the engine's own manifest/partition/bloom FILE SKIPPING is wired into
-  *    this path ([[prunedViewsFor]]): a `WHERE ts > X` arriving through
-  *    query/CLI/MCP opens only the files whose stats can match, instead of
-  *    listing and tasking every file of a 100 TB table and recovering only
-  *    parquet row-group pushdown per file.
+  *  - the engine's own manifest/partition/bloom FILE SKIPPING applies on
+  *    this path: every view scans through a [[GraftFileIndex]], which
+  *    prunes by the filters Catalyst pushes to each scan, so a
+  *    `WHERE ts > X` arriving through query/CLI/MCP opens only the files
+  *    whose stats can match, instead of listing and tasking every file of
+  *    a 100 TB table and recovering only parquet row-group pushdown per
+  *    file.
   */
 class QueryEngine(lh: Lakehouse) {
   import lh.spark
 
-  /** (keptFiles, totalFiles) per table ident for the last [[execute]] that
-    * attempted file skipping — scan-stats introspection for tests/tooling.
-    * Empty when the last query had no prunable single-table predicate. */
-  @volatile var lastScanStats: Map[String, (Int, Int)] = Map.empty
+  /** The frame the last [[execute]] returned, with the scan indexes of
+    * each table it registered. */
+  @volatile private var lastQuery: Option[(DataFrame, Seq[(String, GraftFileIndex)])] = None
+
+  /** (keptFiles, totalFiles) per referenced table for the frame the last
+    * [[execute]] returned: the distinct data files that frame's scans keep
+    * after [[GraftFileIndex]] file skipping, against the files in the
+    * table's snapshot — scan-stats introspection for tests/tooling. Only
+    * tables whose scans received pushed filters appear. Readable before
+    * the frame is collected: reading plans the frame, and collecting it
+    * afterwards reuses that plan and its file listings (Spark resets plan
+    * metrics when an action starts, so such a collect's non-adaptive
+    * scans then report a `numFiles` metric of 0). */
+  def lastScanStats: Map[String, (Int, Int)] = lastQuery.fold(Map.empty[String, (Int, Int)]) {
+    case (df, indexes) =>
+      val byTable = GraftFileIndex.listings(df).flatMap(l =>
+        indexes.collectFirst { case (ident, idx) if idx eq l.index => ident -> l })
+      byTable.groupBy(_._1).collect { case (ident, ls) if ls.exists(_._2.filtered) =>
+        val total = indexes.collect { case (`ident`, idx) => idx.rootPaths }.flatten
+        ident -> ((ls.flatMap(_._2.kept).distinct.size, total.distinct.size))
+      }
+  }
 
   /** Register all tables under short + `ns__table` names (query.py:52-75,
     * joins.py:13-41). Cheap — no materialization. Kept as the explicit
@@ -75,208 +92,44 @@ class QueryEngine(lh: Lakehouse) {
     * when the SQL has no LIMIT substring, as the reference does. */
   def needsLimit(sql: String): Boolean = !sql.toUpperCase.contains("LIMIT")
 
-  /** `maxRows <= 0` disables the auto-LIMIT entirely — the path for
-    * materializing a full result to a table. A `limit(Int.MaxValue)`
-    * sentinel would NOT be free: GlobalLimit shuffles every row to a
-    * single partition, so "unlimited" must mean no limit node at all. */
   /** Serializes analysis: registerReferenced rebinds session-global temp
     * views to the current snapshot, and executeAsOf temporarily binds a
     * table's views to a PAST snapshot — without the lock a concurrent
-    * analysis could bind inside that asof window. File-skipping itself
-    * no longer touches any view (see [[prunedPlanFor]]), so a direct
-    * spark.sql issued outside the engine can never observe a narrowed
-    * scan. The lock covers ANALYSIS only (driver-side, milliseconds) —
-    * returned frames are lazy, so query EXECUTION still runs fully
-    * parallel. */
+    * analysis could bind inside that asof window. File skipping never
+    * touches any view (each scan's [[GraftFileIndex]] prunes for that
+    * scan alone), so a direct spark.sql issued outside the engine can
+    * never observe a narrowed scan. The lock covers ANALYSIS only
+    * (driver-side, milliseconds) — returned frames are lazy, so query
+    * EXECUTION still runs fully parallel. */
   private val analysisLock = new Object
 
+  /** Run `sql` over the catalog tables it references. `maxRows <= 0`
+    * disables the auto-LIMIT entirely — the path for materializing a full
+    * result to a table. A `limit(Int.MaxValue)` sentinel would NOT be
+    * free: GlobalLimit shuffles every row to a single partition, so
+    * "unlimited" must mean no limit node at all. */
   def execute(sql: String, maxRows: Int = 1000): DataFrame = {
     val rewritten = rewriteNamespaces(sql)
-    val df = analysisLock.synchronized {
-      val referenced = registerReferenced(rewritten)
-      val d = spark.sql(rewritten)
-      lastScanStats = Map.empty
-      prunedPlanFor(d, referenced).getOrElse(d)
+    val (df, indexes) = analysisLock.synchronized {
+      val indexes = registerReferenced(rewritten)
+      (spark.sql(rewritten), indexes)
     }
-    recordLineage(sql)
-    if (maxRows > 0 && needsLimit(sql)) df.limit(maxRows) else df
+    val out = if (maxRows > 0 && needsLimit(sql)) df.limit(maxRows) else df
+    lastQuery = Some((out, indexes))
+    out
   }
 
   /** Register temp views for ONLY the catalog tables `rewritten` references
     * — names that are not catalog tables (CTE aliases, logical views, temp
     * views registered elsewhere) are left to Spark's own resolution, as
-    * before. Returns the registered idents. */
-  private def registerReferenced(rewritten: String): Seq[String] = {
-    val idents = referencedTables(rewritten).map { n =>
+    * before. Returns each registered ident with its view's scan indexes. */
+  private def registerReferenced(rewritten: String): Seq[(String, GraftFileIndex)] =
+    referencedTables(rewritten).map { n =>
       val (ns, t) = Catalog.parseIdent(n)
       s"$ns.$t"
-    }.distinct.filter(lh.catalog.tableExists)
-    idents.foreach(lh.catalog.registerView)
-    idents
-  }
-
-  /** Manifest/partition/bloom FILE SKIPPING for the SQL surface.
-    *
-    * Walks the optimized plan (where PushDownPredicates has already placed
-    * filters next to their scans) for Filter nodes whose entire subtree
-    * reads data files of exactly ONE referenced table, extracts the
-    * prunable `attr op literal` conjuncts of those conditions, and — when
-    * the conjuncts actually drop files — SUBTRACTS the pruned-out files
-    * from the already-analyzed plan's own scan leaves (same
-    * `LogicalRelation`, same output exprIds, fewer files; an
-    * all-files-pruned leaf becomes an empty `LocalRelation`). No temp
-    * view is ever rebound, so a concurrent `spark.sql` outside the
-    * engine can never observe a narrowed scan, and the query is analyzed
-    * exactly once. Safety rules, each conservative:
-    *  - a table's data relations must ALL sit under such filters — a
-    *    self-join occurrence without its own filter disables pruning for
-    *    that table;
-    *  - multiple filters on one table contribute only the INTERSECTION of
-    *    their conjunct sets (a self-join with different predicates prunes
-    *    by what they share, possibly nothing);
-    *  - relation totals count SUBQUERY occurrences too, while coverage
-    *    counts only main-plan ones — a scalar subquery reading the same
-    *    table therefore BLOCKS pruning instead of silently aggregating
-    *    over a narrowed view;
-    *  - only `data/commit-*` scans are owned by a table: a MoR snapshot's
-    *    position/equality delete-file reads neither count nor disqualify,
-    *    and the pruned view re-applies all deletes itself;
-    *  - the prune never drops a file that could match (FilePruning's
-    *    three-valued design) and the user's own predicate stays in the
-    *    re-analyzed plan, so results are identical to the unpruned read.
-    * Returns the swapped frame, or None when nothing pruned. */
-  private def prunedPlanFor(d: DataFrame,
-      referenced: Seq[String]): Option[DataFrame] = {
-    if (referenced.isEmpty) return None
-    val plan = d.queryExecution.optimizedPlan
-    val dirs: Map[String, String] = referenced.map { ident =>
-      val (ns, t) = Catalog.parseIdent(ident)
-      ident -> lh.catalog.tableDir(ns, t).toString
-    }.toMap
-
-    // The ident whose data files this leaf scans, or None for anything
-    // else (delete-file reads, local relations, foreign paths).
-    def ownerOf(p: LogicalPlan): Option[String] = p match {
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation =>
-          val paths = fs.location.rootPaths.map(_.toUri.getPath)
-          val owners = paths.map(pp => dirs.collectFirst {
-            case (id, d) if pp.startsWith(d + "/data/commit-") => id
-          })
-          if (paths.nonEmpty && owners.forall(_.isDefined) &&
-              owners.flatten.distinct.size == 1) owners.head
-          else None
-        case _ => None
-      }
-      case _ => None
+    }.distinct.filter(lh.catalog.tableExists).flatMap { ident =>
+      GraftFileIndex.of(lh.catalog.registerView(ident)).map(ident -> _)
     }
-
-    val totals = plan
-      .collectWithSubqueries { case lr: LogicalRelation => ownerOf(lr) }
-      .flatten.groupBy(identity).map { case (k, v) => k -> v.size }
-
-    val covered = scala.collection.mutable.Map.empty[String, Int]
-    val conds = scala.collection.mutable.Map.empty[String, List[Expression]]
-    def splitAnd(e: Expression): Seq[Expression] = e match {
-      case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
-        splitAnd(l) ++ splitAnd(r)
-      case o => Seq(o)
-    }
-    def walk(p: LogicalPlan): Unit = p match {
-      case f: LFilter =>
-        val leaves = f.child.collectLeaves()
-        val owners = leaves.map(ownerOf)
-        if (leaves.nonEmpty && owners.forall(_.isDefined) &&
-            owners.flatten.distinct.size == 1) {
-          val t = owners.head.get
-          // PROVENANCE check, by exprId: a conjunct prunes only if every
-          // attribute it references IS an output of the scan itself. A
-          // HAVING filter above an Aggregate whose alias collides with a
-          // base column name ("… MAX(ts) AS ts … HAVING ts > X") sits in
-          // exactly this subtree shape, but its attributes carry the
-          // AGGREGATE's exprIds, not the scan's — matching by name alone
-          // would prune data files by a row-level column that was never
-          // filtered. Skipped conjuncts simply don't prune.
-          val scanIds = leaves.flatMap(_.output.map(_.exprId)).toSet
-          val rowLevel = splitAnd(f.condition).filter(_.references.toSeq
-            .forall(a => scanIds.contains(a.exprId)))
-          if (rowLevel.nonEmpty) {
-            covered(t) = covered.getOrElse(t, 0) + leaves.size
-            conds(t) = rowLevel.reduce(
-              org.apache.spark.sql.catalyst.expressions.And) ::
-              conds.getOrElse(t, Nil)
-          } else f.children.foreach(walk)
-          // no recursion under a recorded filter: CombineFilters has
-          // already merged nested filters
-        } else f.children.foreach(walk)
-      case other => other.children.foreach(walk)
-    }
-    walk(plan)
-
-    var stats = Map.empty[String, (Int, Int)]
-    // pruned-OUT path set per prunable ident (manifest renderings)
-    val prunedOut: Map[String, Set[String]] =
-      conds.keys.toSeq.sorted.flatMap { ident =>
-        if (!totals.get(ident).contains(covered(ident))) None
-        else {
-          val tbl = lh.catalog.loadTable(ident)
-          val schema = tbl.schema
-          val sets = conds(ident).map(c => FilePruning
-            .conjunctsFromLeaves(ColumnBridge.catalystConjuncts(c), schema).toSet)
-          val conjs = sets.reduce(_ intersect _).toSeq
-          if (conjs.isEmpty) None
-          else {
-            val (out, kept, total) = tbl.prunedOutPaths(conjs)
-            stats += ident -> ((kept, total))
-            if (out.isEmpty) None else Some(ident -> out)
-          }
-        }
-      }.toMap
-    lastScanStats = stats
-    if (prunedOut.isEmpty) return None
-
-    // Subtract the pruned-out files from the analyzed plan's own scan
-    // leaves: the relation keeps its output attributes (exprIds), so the
-    // rest of the plan — MoR anti-joins, field-id projections, the user's
-    // filters — stays bound exactly as analyzed. Strip scheme/authority
-    // like GraftFileIndex: leaves render `file:/p`, manifests plain `/p`.
-    def canon(p: String): String =
-      p.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/*", "/")
-    val analyzed = d.queryExecution.analyzed
-    var changed = false
-    val swapped = analyzed.transformUp {
-      case lr: LogicalRelation =>
-        ownerOf(lr).filter(prunedOut.contains) match {
-          case Some(ident) => lr.relation match {
-            // partitionSchema must be empty: the replacement index forces
-            // PartitionSpec.emptySpec, so a relation that surfaced
-            // partition columns would lose them (graft reads list leaf
-            // FILES with an explicit schema, so this is always empty in
-            // practice — the guard keeps it conservative, not load-bearing)
-            case fs: HadoopFsRelation if fs.partitionSchema.isEmpty =>
-              val out = prunedOut(ident).map(canon)
-              val keptPaths = fs.location.rootPaths
-                .filterNot(p => out(canon(p.toString)))
-              if (keptPaths.size == fs.location.rootPaths.size) lr
-              else if (keptPaths.isEmpty) {
-                changed = true
-                org.apache.spark.sql.catalyst.plans.logical
-                  .LocalRelation(lr.output)
-              } else {
-                changed = true
-                val kset = keptPaths.map(p => canon(p.toString)).toSet
-                val idx = new org.apache.spark.sql.graft.GraftFileIndex(
-                  spark, keptPaths, fs.dataSchema, _ => kset)
-                lr.copy(relation = fs.copy(location = idx)(fs.sparkSession))
-              }
-            case _ => lr
-          }
-          case None => lr
-        }
-    }
-    if (!changed) None
-    else Some(org.apache.spark.sql.graft.DatasetBridge.ofRows(spark, swapped))
-  }
 
   /** Time-travel query: the NAMED table resolves at the given
     * snapshot-id/timestamp (query.py:169-197); any OTHER table the SQL
@@ -303,7 +156,7 @@ class QueryEngine(lh: Lakehouse) {
       try spark.sql(rewritten)
       finally {
         // restore the CURRENT views: the asof binding must not leak into
-        // later queries (same rule as the narrowed pruning views)
+        // later queries
         try lh.catalog.registerView(table)
         catch { case _: Exception =>
           spark.catalog.dropTempView(short)
@@ -341,8 +194,6 @@ class QueryEngine(lh: Lakehouse) {
     registerReferenced(rewritten)
     spark.sql(rewritten).queryExecution.analyzed
   }
-
-  private def recordLineage(sql: String): Unit = ()
 
   /** Equi-join candidates from matching column names across tables, with a
     * ready-to-run join SQL template (reference suggest_joins,

@@ -65,9 +65,6 @@ object Spread {
     df.sparkSession.conf.getOption("spark.graft.spread.rowsPerTask")
       .flatMap(_.toLongOption).getOrElse(32768L)
 
-  private def debug(df: DataFrame): Boolean =
-    df.sparkSession.conf.getOption("spark.graft.spread.debug").contains("true")
-
   /** Row-aware parallelism floor. `weight` is the call site's relative
     * CPU cost per row of this frame versus a plain projection row (a
     * quadratic verify or a per-doc hash loop passes >1); the session cap
@@ -75,18 +72,12 @@ object Spread {
   def target(df: DataFrame, weight: Long = 1L): Int = {
     val c = cap(df)
     val rpt = rowsPerTask(df)
-    val n =
-      if (rpt <= 0L) c
-      else {
-        val est = estRows(df)
-        if (est < 0L) c
-        else math.max(1L, math.min(c.toLong, (sat(est, weight) + rpt - 1) / rpt)).toInt
-      }
-    if (debug(df))
-      // scalastyle:off println
-      println(s"[spread] est=${estRows(df)} weight=$weight cap=$c -> n=$n")
-      // scalastyle:on println
-    n
+    if (rpt <= 0L) c
+    else {
+      val est = estRows(df)
+      if (est < 0L) c
+      else math.max(1L, math.min(c.toLong, (sat(est, weight) + rpt - 1) / rpt)).toInt
+    }
   }
 
   /** Hash-partition `df` by `keys` into the row-aware floor. Use
@@ -133,6 +124,10 @@ object Spread {
 
   private val Huge = Long.MaxValue / 8
 
+  /** Row fan-out assumed per explode: the measured shingle/token fan-out
+    * of the text operators. */
+  private val ExplodeFactor = 48L
+
   private def sat(a: Long, b: Long): Long = {
     val r = a * b
     if (a != 0 && (r / a != b || r < 0)) Huge else math.min(r, Huge)
@@ -146,16 +141,12 @@ object Spread {
     * Leaves use exact parquet footer row counts where available (metadata
     * read once per file, memoized by path+size), else Catalyst's
     * size-only stats divided by the schema's default row width; explodes
-    * multiply by `spark.graft.spread.explodeFactor` (default 48 — the
-    * measured shingle/token fan-out of the text operators); joins and
-    * unions saturate upward. Estimates only need to be order-of-magnitude
-    * right: any value below cap×rowsPerTask trims idle tasks, anything
-    * above pins at the cap exactly like r21. */
+    * multiply by [[ExplodeFactor]]; joins and unions saturate upward.
+    * Estimates only need to be order-of-magnitude right: any value below
+    * cap×rowsPerTask trims idle tasks, anything above pins at the cap
+    * exactly like r21. */
   private[graft] def estRows(df: DataFrame): Long = {
     if (df.isStreaming) return -1L
-    val explodeFactor = df.sparkSession.conf
-      .getOption("spark.graft.spread.explodeFactor")
-      .flatMap(_.toLongOption).getOrElse(48L)
     val hconf = df.sparkSession.sessionState.newHadoopConf()
 
     def leafRows(l: LeafNode): Long = l match {
@@ -180,7 +171,7 @@ object Spread {
 
     def est(p: LogicalPlan): Long = p match {
       case l: LeafNode => leafRows(l)
-      case g: Generate => sat(est(g.child), explodeFactor)
+      case g: Generate => sat(est(g.child), ExplodeFactor)
       case j: Join => satAdd(est(j.left), est(j.right))
       case u: Union => u.children.map(est).foldLeft(0L)(satAdd)
       case other if other.children.size == 1 => est(other.children.head)

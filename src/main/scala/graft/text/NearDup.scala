@@ -19,7 +19,7 @@ object NearDup {
 
   /** Per-doc distinct shingle table: (doc_id, s). */
   // String keys, not xxhash64 longs, deliberately: an interleaved A/B at
-  // sf0.1 (tools/AbShingle, 4 alternating runs in one JVM) measured the
+  // sf0.1 (4 alternating runs in one JVM, NOTES_r6.md) measured the
   // hashed-key pair pipeline ~50% SLOWER (median 1.58s vs 1.06s) — the
   // extra projection over the exploded rows costs more than the narrower
   // shuffle key saves at gate scale, and string keys keep the table
@@ -268,7 +268,7 @@ object NearDup {
       // mega-bucket degrades to a doc_id CHAIN (see MinHashLSH
       // candidatePairs), and each ROUND costs a checkpoint + convergence
       // action. Measured on a 60-doc chain (the q185 planted shape,
-      // tools/CcRounds): converges at maxIter=3 with two jumps vs 6 with
+      // OPTIMIZATION_r21.md): converges at maxIter=3 with two jumps vs 6 with
       // one. `propagated` and `j1` are LAZILY local-checkpointed before
       // their self-joins (r22, ADVICE): exchange reuse dedups shuffle
       // WRITES, not post-shuffle join stages, so without the checkpoints
@@ -339,8 +339,9 @@ object NearDup {
     * LogicalRDD (one RDD, computed once per job) replaces re-executing the
     * subtree per plan reference — without adding a materialization job of
     * its own. Always executor-local (these live for one round and are
-    * released right after it; losing one to executor failure just recomputes
-    * the round). Registered in [[ownCkptIds]] for release. */
+    * released right after it). `localCheckpoint` truncates lineage, so
+    * losing an executor that holds one of these blocks FAILS the job; it
+    * is not recomputed. Registered in [[ownCkptIds]] for release. */
   private def lazyCkpt(df: DataFrame): DataFrame = {
     val out = df.localCheckpoint(eager = false)
     out.queryExecution.analyzed.foreach {

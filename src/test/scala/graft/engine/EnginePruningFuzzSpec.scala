@@ -4,19 +4,18 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkFixture
 
-/** Differential fuzz of the SQL entry path's view-swap file skipping
-  * (QueryEngine.execute → prunedPlanFor): for RANDOM queries — joins,
-  * self-joins with divergent/missing predicates, scalar and IN
-  * subqueries (including over the SAME table, which must block pruning),
-  * HAVING-alias collisions, UNION ALL branches, namespace-qualified
-  * names — `execute(sql)` must equal the same SQL analyzed over plain
-  * UNPRUNED views of the same tables. The conjunct extraction, the
-  * self-join intersection guard, the subquery occurrence-total guard,
-  * and the analyzed-plan leaf swap are exactly the conservative logic
-  * PruningFuzzSpec's sibling campaign caught real bugs in for
-  * prunedRead; this hunts the SQL-surface equivalents. A teeth check
-  * asserts file skipping actually fired across the run. Deterministic
-  * seeds. */
+/** Differential fuzz of the SQL entry path's file skipping
+  * (QueryEngine.execute → each scan's GraftFileIndex.listFiles): for
+  * RANDOM queries — joins, self-joins with divergent/missing predicates,
+  * scalar and IN subqueries (including over the SAME table, whose scan
+  * must stay full), HAVING-alias collisions, UNION ALL branches,
+  * namespace-qualified names — `execute(sql)` must equal the same SQL
+  * analyzed over plain UNPRUNED views of the same tables. The conjunct
+  * extraction from pushed filters and the per-scan pruning are exactly
+  * the conservative logic PruningFuzzSpec's sibling campaign caught real
+  * bugs in for prunedRead; this hunts the SQL-surface equivalents. A
+  * teeth check asserts file skipping actually fired across the run.
+  * Deterministic seeds. */
 class EnginePruningFuzzSpec extends AnyFunSuite {
   lazy val spark = SparkFixture.spark
   import spark.implicits._
@@ -95,11 +94,11 @@ class EnginePruningFuzzSpec extends AnyFunSuite {
         s"ON a.id = b.id WHERE ${predA("a")} AND ${predA("b")}"
       case 6 => // one self-join occurrence GENUINELY unfiltered: joining
         // on grp with an id-only predicate, so constraint propagation
-        // cannot infer a filter onto b — pruning must disable for the
-        // table (narrowing b's scan would drop matching rows)
+        // cannot infer a filter onto b — b's scan must stay full
+        // (narrowing it would drop matching rows)
         s"SELECT count(*) AS n, sum(b.v) AS sv FROM %FA% a JOIN %FA% b " +
           s"ON a.grp = b.grp WHERE a.id >= ${100 + rng.nextInt(400)}"
-      case 7 => // scalar subquery over the SAME table blocks pruning
+      case 7 => // scalar subquery over the SAME table: its scan stays full
         s"SELECT count(*) AS n FROM %FA% a WHERE ${predA("a")} AND " +
           s"a.id > (SELECT min(b.id) + ${rng.nextInt(400)} FROM %FA% b)"
       case 8 => s"SELECT count(*) AS n FROM %FA% a WHERE ${predA("a")} " +
@@ -116,11 +115,11 @@ class EnginePruningFuzzSpec extends AnyFunSuite {
         // UNION ALL: two occurrences — sometimes both filtered
         // (intersection semantics), sometimes the second branch BARE:
         // no filter and no join key means the optimizer infers nothing
-        // onto it, so only the occurrence-totals guard stops the swap
-        // from narrowing a scan that must stay full
+        // onto it, so its scan must stay full
         (if (i % 14 == 0)
           // the bare-branch leg gets a GUARANTEED-prunable range filter
-          // on the other branch, so a broken totals guard must misprune
+          // on the other branch, so pruning that leaked across scans
+          // would misprune
           s"SELECT a.id FROM %FA% a WHERE a.id >= ${250 + rng.nextInt(200)} " +
             s"UNION ALL SELECT b.id FROM %FA% b"
         else

@@ -3,7 +3,11 @@ package graft.engine
 import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftFileIndex
 import graft.SparkFixture
 
 /** The SQL entry path's file skipping + per-query lazy view registration
@@ -18,6 +22,18 @@ class EnginePruningSpec extends AnyFunSuite {
 
   private def newLh() =
     graft.Lakehouse.open(spark, SparkFixture.tmpDir("graft-eps-").toString)
+
+  /** Files each data scan of a COLLECTED frame read, from the executed
+    * plan's `numFiles` metric (subqueries and AQE stages included) — what
+    * `GraftFileIndex.listFiles` kept. `Dataset.inputFiles` would list the
+    * index's full file set instead. */
+  private def filesPerScan(df: DataFrame): Seq[Long] = {
+    object Plans extends AdaptiveSparkPlanHelper
+    Plans.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case f: FileSourceScanExec if f.relation.location.isInstanceOf[GraftFileIndex] =>
+        f.metrics("numFiles").value
+    }
+  }
 
   /** Four single-file commits with disjoint id ranges, so bounds-based
     * skipping has something to skip. */
@@ -45,11 +61,11 @@ class EnginePruningSpec extends AnyFunSuite {
       s"scan stats: ${lh.engine.lastScanStats}")
     // and the PLAN actually reads only those files — the prune reached the
     // scan, it is not just bookkeeping
-    assert(res.inputFiles.length == 2, res.inputFiles.mkString(", "))
+    assert(filesPerScan(res) == Seq(2L), filesPerScan(res))
     val want = t.read().where(col("id") >= 250).orderBy("id")
       .select("id", "name").collect().toSeq
     assert(got == want)
-    // the narrowed view was RESTORED: a follow-up full query sees all rows
+    // the view was never narrowed: a follow-up full query sees all rows
     assert(lh.engine.execute("SELECT COUNT(*) AS n FROM evt", 0)
       .collect()(0).getLong(0) == 400)
   }
@@ -124,18 +140,35 @@ class EnginePruningSpec extends AnyFunSuite {
     assert(n == 10)
   }
 
-  test("scalar subquery over the SAME table blocks pruning — the subquery " +
-      "aggregates over every row, not a narrowed view") {
+  test("same-table scalar subquery: outer scan prunes, subquery reads all") {
     val lh = newLh()
     buildRanged(lh, "default.sq")
     val sql = "SELECT COUNT(*) AS n FROM sq " +
       "WHERE id >= 300 AND id > (SELECT AVG(id) FROM sq)"
-    val n = lh.engine.execute(sql, 0).collect()(0).getLong(0)
+    val res = lh.engine.execute(sql, 0)
+    val n = res.collect()(0).getLong(0)
     // avg(id) = 199.5 over ALL rows; id >= 300 matches 100 rows
     assert(n == 100)
-    // the subquery occurrence is uncovered -> no prune recorded for sq
-    assert(!lh.engine.lastScanStats.contains("default.sq"),
-      s"must not prune under a same-table subquery: ${lh.engine.lastScanStats}")
+    // each scan prunes by its OWN pushed filters: the outer scan (id >= 300)
+    // reads 1 file, the unfiltered subquery scan of the same table all 4
+    assert(filesPerScan(res).sorted == Seq(1L, 4L), filesPerScan(res))
+    assert(lh.engine.lastScanStats.get("default.sq").contains((4, 4)),
+      s"distinct files over both scans: ${lh.engine.lastScanStats}")
+  }
+
+  test("lastScanStats is readable before the frame is collected, and the " +
+      "collect runs the plan it was read from") {
+    val lh = newLh()
+    buildRanged(lh, "default.pre")
+    // default maxRows: the returned frame is the auto-LIMITed one
+    val res = lh.engine.execute("SELECT id FROM pre WHERE id >= 250 ORDER BY id")
+    assert(lh.engine.lastScanStats.get("default.pre").contains((2, 4)),
+      s"before collect: ${lh.engine.lastScanStats}")
+    val plan = res.queryExecution.executedPlan
+    assert(res.collect().map(_.getLong(0)).toSeq == (250L until 400L))
+    assert(res.queryExecution.executedPlan eq plan)
+    assert(lh.engine.lastScanStats.get("default.pre").contains((2, 4)),
+      s"after collect: ${lh.engine.lastScanStats}")
   }
 
   test("merge-on-read deletes apply on the pruned scan") {
